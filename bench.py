@@ -182,7 +182,7 @@ def main() -> None:
             # BENCH/raw_r4/funnel_800k_*.json
             "matched_pair_efficiencies_8v32": [0.79, 0.37, 0.32, 0.46, 0.35],
             "matched_pair_efficiencies_4v16": [0.77, 0.63],
-            # narrow stage format (library default): forward, reversed,
+            # narrow stage format (the only one now): forward, reversed,
             # and final-HEAD interleaved pairs —
             # BENCH/funnel_800k_8v32_narrow{,_rev,_head}_r4.json
             "matched_pair_efficiencies_8v32_narrow": [0.585, 0.37, 0.483, 0.471],
@@ -205,28 +205,6 @@ def main() -> None:
             "lossless": cev["lossless"],
             "evidence_file": os.path.basename(cont_ev),
         }
-    # narrow-vs-wide stage-format A/B (store-write IO vs wall, matched
-    # interleaved pairs at local[16]/800k — BENCH/BASELINE.md "Narrow
-    # stage format")
-    for name in ("funnel_800k_format_ab_r5.json",
-                 "funnel_800k_format_ab_r4.json"):
-        ab_ev = os.path.join(bench_dir, name)
-        if os.path.exists(ab_ev):
-            break
-    if os.path.exists(ab_ev):
-        with open(ab_ev) as f:
-            ab = json.load(f)["summary"]
-        scaling = scaling or {}
-        scaling["funnel_stage_format_ab"] = {
-            "wide_store_gb": ab["wide_store_gb"],
-            "narrow_store_gb": ab["narrow_store_gb"],
-            "store_write_reduction": ab["store_write_reduction"],
-            "matched_pair_wall_ratios_narrow_over_wide":
-                ab["matched_pair_wall_ratios_narrow_over_wide"],
-            "funnel_audits_identical": ab["funnel_audits_identical"],
-            "evidence_file": os.path.basename(ab_ev),
-        }
-
     total = round(sum(timings.values()), 3)
     full_record = {
         "metric": "headline_queries_total_wall",

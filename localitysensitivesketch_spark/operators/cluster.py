@@ -3,34 +3,30 @@
 The reference's end product is a cluster assignment per key (the paper's
 "clustering-preserving" guarantee — keys grouped by value similarity,
 ``Sketching/LSSFingerprintAtomic.java:474-498``).  Ours is the duplicate
-cluster label per doc.  Two interchangeable algorithms behind one
-interface (SURVEY §4.2 item 2):
+cluster label per doc: the min doc_id of its connected component.
 
-* ``algorithm="label"`` (default) — iterative min-label propagation:
-  ``label(v) ← min(label(v), min over neighbors u of label(u))`` to
-  fixpoint.  O(diameter) rounds — duplicate clusters from LSH banding are
-  near-cliques, so 2-3 rounds in practice.
-* ``algorithm="star"`` — alternating large-star / small-star (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC 2014):
-  O(log n) rounds regardless of diameter — the fallback for chain-shaped
-  graphs (boilerplate A↔B↔C…) where label propagation needs O(n) rounds.
+One algorithm: alternating large-star / small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC 2014).  It needs
+O(log n) rounds regardless of diameter, so chain-shaped graphs
+(boilerplate A↔B↔C…, page versions) merge fully; min-label propagation
+would need O(diameter) rounds, so any fixed round cap splits long chains.
+If the edge set has not reached its fixpoint after ``max_iter`` rounds,
+:func:`connected_components` raises instead of returning partial labels.
 
-Both are deterministic and order-independent (min is commutative/
-associative), so labels are identical at any parallelism level — the
+Labels are deterministic and order-independent (min is commutative/
+associative), so they are identical at any parallelism level — the
 engine's analogue of "same config ⇒ same clusters".  Canonical member =
-min(doc_id).  ``localCheckpoint`` each round truncates the lineage that
+min(doc_id).  A checkpoint each half-round truncates the lineage that
 iterative joins otherwise accumulate.
 
-Scale notes: the iteration runs ONLY over vertices incident to ≥1 edge —
-isolated vertices (the vast majority of a web corpus: non-duplicates)
-never enter the loop joins and are labeled with themselves in one final
-left join.  Labels are initialized to min(v, min neighbor), which IS the
-first propagation round — one fewer iteration (2 Spark jobs) per run.
+Scale notes: the iteration runs ONLY over the edge set — isolated
+vertices (the vast majority of a web corpus: non-duplicates) never enter
+the loop joins and are labeled with themselves in one final left join.
 
 Durability: ``localCheckpoint`` (the default) stores to executor-local
 disk — lost on executor death, which merely recomputes here (single-job
 lineage).  On a long multi-executor run, pass ``checkpoint_dir`` to route
-per-round labels through ``sc.setCheckpointDir`` + reliable
+per-round edge sets through ``sc.setCheckpointDir`` + reliable
 ``checkpoint()`` (HDFS/object store) instead; the loop structure is
 unchanged and the labels are identical.
 """
@@ -48,26 +44,12 @@ logger = logging.getLogger(__name__)
 def _ckpt_fn(df_any: DataFrame, checkpoint_dir: str | None):
     """Round-truncation strategy: reliable ``checkpoint()`` when a
     directory is given (set once on the SparkContext), else
-    ``localCheckpoint``.  ``eager=False`` marks for materialization on
-    first use (no extra job) — used to pin an expensive upstream plan so
-    downstream self-unions evaluate it once."""
+    ``localCheckpoint``."""
     if checkpoint_dir is None:
-        return lambda df, eager=True: df.localCheckpoint(eager=eager)
+        return lambda df: df.localCheckpoint(eager=True)
     sc = df_any.sparkSession.sparkContext
     sc.setCheckpointDir(checkpoint_dir)
-    return lambda df, eager=True: df.checkpoint(eager=eager)
-
-
-def _sym_edges(edges: DataFrame) -> DataFrame:
-    """(id1, id2) → symmetric (src, dst) edge list, self-loops dropped."""
-    return (
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return lambda df: df.checkpoint(eager=True)
 
 
 def connected_components(
@@ -75,7 +57,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    algorithm: str = "label",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """vertices(id), edges(id1, id2) → (doc_id, cluster_id).
@@ -84,76 +65,6 @@ def connected_components(
     vertices label themselves (outside the iteration).  ``checkpoint_dir``
     switches round truncation from executor-local ``localCheckpoint`` to
     reliable ``checkpoint()`` (survives executor loss on a cluster).
-    """
-    if algorithm == "star":
-        return connected_components_star(
-            vertices, edges, id_col, max_iter, checkpoint_dir
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
-
-    ck = _ckpt_fn(edges, checkpoint_dir)
-    verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
-    # pin the (often expensive — a whole candidate join) edge plan BEFORE
-    # symmetrizing: _sym_edges unions two projections of it, and without
-    # this the upstream plan's post-exchange work runs twice (measured 2×
-    # the ngram-join wall on the token-CC query)
-    sym = ck(_sym_edges(ck(edges, eager=False)))
-
-    # init = min(v, min neighbor): round 1 of propagation, for free
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nbr"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("nbr")).alias("label"),
-        )
-    )
-    labels = ck(labels)
-
-    for it in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("old_label"),
-            )
-        )
-        new_labels = ck(new_labels)
-        labels = new_labels.select("id", "label")
-        # convergence check EVERY round: the count job reads the
-        # round's already-checkpointed labels (cheap, no recompute),
-        # while each avoided iteration is a full edge-join + aggregate +
-        # checkpoint round — LSH duplicate clusters are near-cliques, so
-        # the init (= round 1) usually converges immediately and the
-        # first in-loop round just confirms it; checking here saves the
-        # whole second in-loop round that the old >=1 gate always paid
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
-        if changed == 0:
-            break
-
-    return verts.join(labels, "id", "left").select(
-        F.col("id").alias("doc_id"),
-        F.coalesce("label", F.col("id")).alias("cluster_id"),
-    )
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components.
 
     Each round rewrites the edge set (canonical ``lo < hi`` pairs):
 
@@ -163,9 +74,10 @@ def connected_components_star(
       plus u itself, i.e. emit (m, v) and (m, u).
 
     Components contract into stars centered at their min node in
-    O(log n) rounds (Kiveris et al., SoCC 2014 — published algorithm,
-    reimplemented from the paper).  Fixpoint = edge set unchanged; at
-    fixpoint every edge is (component_min, member).
+    O(log n) rounds (published algorithm, reimplemented from the paper).
+    Fixpoint = every edge is (component_min, member), checked after each
+    large-star.  Raises ``RuntimeError`` when the fixpoint is not reached
+    within ``max_iter`` rounds.
     """
     ck = _ckpt_fn(edges, checkpoint_dir)
     verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
@@ -189,21 +101,44 @@ def connected_components_star(
             e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         )
 
+    def is_star_forest(e: DataFrame) -> bool:
+        # no node has two parents and no parent has a parent: every
+        # component is a star centered at its min, which both operators
+        # map to itself — so this is exactly the fixpoint, tested in one
+        # job on the current edge set instead of diffing two rounds
+        roles = e.select(
+            F.col("hi").alias("x"), F.lit(1).alias("parents"),
+            F.lit(False).alias("is_lo"),
+        ).unionByName(
+            e.select(
+                F.col("lo").alias("x"), F.lit(0).alias("parents"),
+                F.lit(True).alias("is_lo"),
+            )
+        )
+        per_node = roles.groupBy("x").agg(
+            F.sum("parents").alias("parents"), F.max("is_lo").alias("is_lo")
+        )
+        return per_node.filter(
+            (F.col("parents") > 1) | ((F.col("parents") == 1) & F.col("is_lo"))
+        ).isEmpty()
+
     for _ in range(max_iter):
         # large-star
         sym = symmetrize(E)
-        ls = (
+        E = ck(
             sym.join(closed_min(sym), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        ls = ck(ls)
+        if is_star_forest(E):
+            break
         # small-star
-        sym2 = symmetrize(ls)
+        sym2 = symmetrize(E)
         m2 = closed_min(sym2)
-        ss = (
+        # m ≤ v and m ≤ u by construction, so (lo, hi) stays canonical
+        E = ck(
             sym2.join(m2, "u")
             .filter(F.col("v") < F.col("u"))
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
@@ -211,19 +146,15 @@ def connected_components_star(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        ss = ck(ss)
-        # m ≤ v and m ≤ u by construction, so (lo, hi) stays canonical
-        converged = (
-            ss.count() == E.count() and ss.exceptAll(E).count() == 0
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter"
         )
-        E = ss
-        if converged:
-            break
 
-    stars = E.groupBy("hi").agg(F.min("lo").alias("label"))
-    return verts.join(
-        stars.select(F.col("hi").alias("id"), "label"), "id", "left"
-    ).select(
+    # a star forest gives each member exactly one edge, to its label
+    stars = E.select(F.col("hi").alias("id"), F.col("lo").alias("label"))
+    return verts.join(stars, "id", "left").select(
         F.col("id").alias("doc_id"),
         F.coalesce("label", F.col("id")).alias("cluster_id"),
     )

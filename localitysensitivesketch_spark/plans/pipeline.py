@@ -80,7 +80,6 @@ class CheckpointStore:
         root: str,
         cfg: SketchConfig,
         snapshot_retention: int = 2,
-        gc_per_commit: bool = True,
     ):
         self.spark = spark
         self.root = root
@@ -90,15 +89,6 @@ class CheckpointStore:
         # (Iceberg's expire_snapshots retention; the current version is
         # always readable and never counts against this)
         self.snapshot_retention = snapshot_retention
-        # a stage commit is the natural point where the PREVIOUS stage's
-        # dropped DataFrames stop being reachable, but their
-        # localCheckpoint blocks stay pinned on the executors until the
-        # driver's Python GC releases the py4j refs (only then does
-        # Spark's ContextCleaner unpersist them).  One gc.collect() per
-        # commit (a handful per pipeline run, driver-side, no Spark job)
-        # keeps long multi-stage runs from dragging a growing tail of
-        # dead blocks into every later tier's memory budget.
-        self.gc_per_commit = gc_per_commit
         os.makedirs(root, exist_ok=True)
 
     # -- commit protocol ----------------------------------------------------
@@ -177,6 +167,25 @@ class CheckpointStore:
             .agg(F.count("*").alias("rows"))
             .select(F.lit(stage).alias("stage"), "partition_id", "rows")
         )
+        self._commit(stage, out, wall_sec, parts, operation)
+        self.expire_snapshots(stage)
+        # a stage commit is the natural point where the PREVIOUS stage's
+        # dropped DataFrames stop being reachable, but their
+        # localCheckpoint blocks stay pinned on the executors until the
+        # driver's Python GC releases the py4j refs (only then does
+        # Spark's ContextCleaner unpersist them).  One gc.collect() per
+        # commit (a handful per pipeline run, driver-side, no Spark job)
+        # keeps long multi-stage runs from dragging a growing tail of
+        # dead blocks into every later tier's memory budget.
+        gc.collect()
+        return out
+
+    def _commit(self, stage: str, out: DataFrame, wall_sec: float,
+                parts: DataFrame, operation: str) -> None:
+        """The commit protocol shared by whole-table and sliced stages:
+        per-partition lineage table, snapshot row, commit marker (written
+        last, atomic rename = the commit point), lineage log row."""
+        d = self._stage_dir(stage)
         parts.write.mode("overwrite").parquet(os.path.join(d, "partitions.parquet"))
         rows = out.count()
         n_parts = out.rdd.getNumPartitions()
@@ -192,50 +201,12 @@ class CheckpointStore:
             "committed_at": time.time(),
             "snapshot_id": snap["snapshot_id"],
         }
-        # marker written last = the commit point (atomic rename)
         tmp = self._commit_path(stage) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, self._commit_path(stage))
         with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
             f.write(json.dumps(meta) + "\n")
-        self.expire_snapshots(stage)
-        if self.gc_per_commit:
-            # release the finished stage's dead checkpoint blocks (see
-            # __init__); driver-side only, no Spark job
-            gc.collect()
-        return out
-
-    def _finalize(self, stage: str, out: DataFrame, wall_sec: float,
-                  parts: DataFrame) -> DataFrame:
-        """Write the per-partition lineage table + commit marker (marker
-        last = the commit point) and append the lineage log row."""
-        d = self._stage_dir(stage)
-        parts.write.mode("overwrite").parquet(os.path.join(d, "partitions.parquet"))
-        rows = out.count()
-        n_parts = out.rdd.getNumPartitions()
-        # sliced commits rewrite slice subdirs in place, so there is no
-        # superseded whole-table version to archive — the snapshot row
-        # still lands (operation marks it) so lineage stays uniform
-        snap = self._record_snapshot(stage, rows, "overwrite-sliced")
-        meta = {
-            "run_id": getattr(self, "run_id", "adhoc"),
-            "stage": stage,
-            "status": "ok",
-            "rows": rows,
-            "n_partitions": n_parts,
-            "wall_sec": round(wall_sec, 3),
-            "config_sha": self.cfg_sha,
-            "committed_at": time.time(),
-            "snapshot_id": snap["snapshot_id"],
-        }
-        tmp = self._commit_path(stage) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._commit_path(stage))
-        with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
-            f.write(json.dumps(meta) + "\n")
-        return out
 
     # -- per-partition (sliced) stage commit --------------------------------
 
@@ -335,7 +306,11 @@ class CheckpointStore:
             .agg(F.count("*").alias("rows"))
             .select(F.lit(stage).alias("stage"), "partition_id", "rows")
         )
-        return self._finalize(stage, full, time.time() - t0, parts)
+        # sliced commits rewrite slice subdirs in place, so there is no
+        # superseded whole-table version to archive — the snapshot row
+        # still lands (operation marks it) so lineage stays uniform
+        self._commit(stage, full, time.time() - t0, parts, "overwrite-sliced")
+        return full
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's commit marker so a later resume recomputes it

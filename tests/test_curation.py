@@ -403,95 +403,100 @@ def test_incremental_update_invalidates_downstream_curation_stages(
     assert res2.survivors.count() == n_surv_before
 
 
-def _dir_bytes(path):
+def _span_rows(df):
+    return sorted(
+        (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
+         tuple((s["start"], s["end"]) for s in r["spans"]))
+        for r in df.collect()
+    )
+
+
+def _span_reference(pre_span, window, min_rem):
+    """The span tier computed from scratch over the pre-span survivors:
+    every survivor cut by ``remove_duplicate_spans``, then docs left with
+    fewer than ``min_rem`` tokens dropped — the full surviving rows the
+    committed keep-list must reconstruct."""
+    from localitysensitivesketch_spark.operators.corpus import (
+        _tokens,
+        remove_duplicate_spans,
+    )
+
+    cleaned = remove_duplicate_spans(pre_span, window_tokens=window)
+    if min_rem > 0:
+        n = F.size(_tokens("text"))
+        cleaned = cleaned.filter((n - F.col("tokens_removed")) >= min_rem)
+    return cleaned
+
+
+def _assert_no_payload_after_captures(spark, root):
+    """The page payload is committed once, at ``captures``; every later
+    stage commits keep-lists or span rows only."""
     import os
 
-    total = 0
-    for dirpath, _, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(dirpath, f))
-    return total
+    checked = 0
+    for stage in os.listdir(root):
+        d = os.path.join(root, stage)
+        if stage.startswith("captures") or not os.path.exists(
+            os.path.join(d, "_COMMIT.json")
+        ):
+            continue
+        cols = spark.read.parquet(os.path.join(d, "data.parquet")).columns
+        assert not {"text", "html"} & set(cols), (stage, cols)
+        checked += 1
+    assert checked
 
 
-def test_narrow_and_wide_stage_formats_produce_identical_results(
-    spark, tmp_path
-):
-    """stage_format='narrow' (keep-list commits) and 'wide' (round-3
-    full-row commits) must agree on every output row — including the
-    span tier's clean_text/spans/tokens_removed and the funnel audit —
-    while the narrow store writes a fraction of the bytes (the page
-    payload is committed once instead of once per tier)."""
+def test_span_tier_matches_reference_and_commits_keep_lists(spark, tmp_path):
+    """The reconstructed survivors — including the span tier's
+    clean_text/spans/tokens_removed and the funnel audit — equal the span
+    tier recomputed from scratch over the run's pre-span survivors, while
+    no stage after ``captures`` commits page text."""
     raw, _ = _raw(spark)
     # messy whitespace doc: exercises the clean_text normalization the
-    # narrow view must reproduce for UNAFFECTED docs
+    # view must reproduce for UNAFFECTED docs
     from datetime import datetime as _dt
 
     messy = spark.createDataFrame(
         [Row(url="http://messy.example/1", warc_ts=_dt(2024, 1, 1),
-             html=b"<m>", text="alpha  beta\tgamma\n delta " * 3 + "end",
+             html=b"<m>",
+             text="alpha  beta\tgamma\n delta epsilon  zeta\teta theta\n "
+                  "iota kappa  lambda mu nu ",
              lang="en")],
         raw.schema,
     )
     raw = raw.unionByName(messy)
     kw = dict(containment_threshold=0.9, exactsubstr_window=5,
               exactsubstr_min_remaining=2)
-
-    roots = {}
-    results = {}
-    for fmt in ("narrow", "wide"):
-        root = str(tmp_path / f"cur_{fmt}")
-        roots[fmt] = root
-        pipe = CurationPipeline(spark, root, gopher_kwargs=GOPHER)
-        results[fmt] = pipe.run(raw, stage_format=fmt, **kw)
-
-    n, w = results["narrow"], results["wide"]
-    assert n.survivors.columns == w.survivors.columns
-
-    def rows(df):
-        return sorted(
-            (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
-             tuple((s["start"], s["end"]) for s in r["spans"]))
-            for r in df.survivors.collect()
-        )
-
-    assert rows(n) == rows(w)
-    assert sorted(map(tuple, n.funnel.collect())) == sorted(
-        map(tuple, w.funnel.collect())
-    )
-    # the whole point: narrow writes materially fewer bytes
-    nb, wb = _dir_bytes(roots["narrow"]), _dir_bytes(roots["wide"])
-    assert nb < wb, (nb, wb)
-
-    # narrow resumes from its own keep-list commits
-    again = CurationPipeline(
-        spark, roots["narrow"], gopher_kwargs=GOPHER
-    ).run(raw, stage_format="narrow", **kw)
-    assert not again.stages_run, again.stages_run
-    assert rows(again) == rows(w)
-
-
-def test_narrow_and_wide_stage_keys_never_collide(spark, tmp_path):
-    """Switching stage_format on the same store root must recompute the
-    re-formatted tiers (keys carry fmt), never hand a keep-list to a
-    reader expecting wide rows."""
-    raw, _ = _raw(spark)
-    root = str(tmp_path / "cur_fmt_switch")
+    root = str(tmp_path / "cur")
     pipe = CurationPipeline(spark, root, gopher_kwargs=GOPHER)
-    r_wide = pipe.run(raw, stage_format="wide")
-    r_narrow = pipe.run(raw, stage_format="narrow")
-    # captures (format-independent) is reused; the re-formatted tiers run
-    assert _has(r_narrow.stages_resumed, "captures")
-    assert _has(r_narrow.stages_run, "exact_kept")
-    assert _has(r_narrow.stages_run, "survivors")
-    a = sorted(map(tuple, r_wide.survivors.select("url", "text").collect()))
-    b = sorted(map(tuple, r_narrow.survivors.select("url", "text").collect()))
-    assert a == b
+    res = pipe.run(raw, **kw)
+    # the same funnel without the span tier resumes every upstream stage;
+    # its survivors are the span tier's input
+    pre = pipe.run(raw, containment_threshold=0.9).survivors
+    expected = _span_reference(pre, 5, 2)
+
+    got = _span_rows(res.survivors)
+    assert got == _span_rows(expected)
+    # the cut actually fires, and the unaffected messy doc gets the
+    # whitespace-normalized clean_text
+    assert any(r[3] > 0 for r in got)
+    assert [r[2] for r in got if r[0] == "http://messy.example/1"] == [
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu"
+    ]
+    audit = {r["stage"]: (r["n_in"], r["n_out"]) for r in res.funnel.collect()}
+    assert audit["exactsubstr"] == (pre.count(), len(got))
+    _assert_no_payload_after_captures(spark, root)
+
+    # a fresh pipeline resumes every stage from the keep-list commits
+    again = CurationPipeline(spark, root, gopher_kwargs=GOPHER).run(raw, **kw)
+    assert not again.stages_run, again.stages_run
+    assert _span_rows(again.survivors) == got
 
 
-def test_narrow_wide_parity_with_null_and_empty_text(spark, tmp_path):
+def test_span_tier_reference_parity_with_null_and_empty_text(spark, tmp_path):
     """Null-/empty-/whitespace-text rows that survive a permissive
-    quality gate must flow through the narrow span-tier view exactly as
-    through the wide path (the narrow view rebuilds clean_text for
+    quality gate must flow through the span-tier view exactly as through
+    the from-scratch span computation (the view rebuilds clean_text for
     unaffected docs with a replica expression — nulls must agree)."""
     from datetime import datetime as _dt
 
@@ -525,42 +530,31 @@ def test_narrow_wide_parity_with_null_and_empty_text(spark, tmp_path):
     # span tier, which is exactly the hazard under test
     gopher = dict(min_tokens=0, min_stopword_ratio=0.0,
                   min_chars_per_token=0.0, max_chars_per_token=1e9)
-
-    def rows(res):
-        return sorted(
-            (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
-             tuple((s["start"], s["end"]) for s in r["spans"]))
-            for r in res.survivors.collect()
-        )
+    pipe = CurationPipeline(spark, str(tmp_path / "odd"), gopher_kwargs=gopher)
+    pre = pipe.run(raw).survivors
 
     # min_remaining=0 exercises the clean_text-rebuild replica; 2
     # exercises the null-safe kept verdict (a null-text doc has
-    # size(_tokens(NULL)) = NULL — the wide filter drops it, and the
-    # narrow view must commit kept=false instead of dropping the row
-    # from the affected commit and resurrecting it at reconstruction)
+    # size(_tokens(NULL)) = NULL — the reference filter drops it, and the
+    # view must commit kept=false instead of dropping the row from the
+    # affected commit and resurrecting it at reconstruction)
     for min_rem in (0, 2):
-        results = {}
-        for fmt in ("narrow", "wide"):
-            pipe = CurationPipeline(
-                spark, str(tmp_path / f"odd_{fmt}_{min_rem}"),
-                gopher_kwargs=gopher,
-            )
-            results[fmt] = pipe.run(
-                raw, stage_format=fmt, exactsubstr_window=5,
-                exactsubstr_min_remaining=min_rem,
-            )
-
-        n, w = rows(results["narrow"]), rows(results["wide"])
-        assert n == w, f"narrow/wide diverge at min_remaining={min_rem}"
-        urls = {r[0] for r in n}
+        res = pipe.run(
+            raw, exactsubstr_window=5, exactsubstr_min_remaining=min_rem,
+        )
+        got = _span_rows(res.survivors)
+        assert got == _span_rows(_span_reference(pre, 5, min_rem)), (
+            f"span view diverges from the reference at min_remaining={min_rem}"
+        )
+        urls = {r[0] for r in got}
         if min_rem == 0:
             # the oddballs actually made it through (the test is vacuous
             # if the gate dropped them)
             assert ("http://odd.example/null" in urls
                     or "http://odd.example/empty" in urls)
         else:
-            # both formats must drop the null-text doc (NULL verdict
-            # pinned to kept=false on the narrow path)
+            # the null-text doc is dropped (NULL verdict pinned to
+            # kept=false)
             assert "http://odd.example/null" not in urls
             assert "http://odd.example/empty" not in urls
 

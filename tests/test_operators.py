@@ -610,23 +610,47 @@ def test_percentile_approx_plan_and_exact_default(spark):
     assert abs(a - e) <= 1.0
 
 
-def test_cc_star_path_graph_converges_in_log_rounds(spark):
-    """1000-node path graph: min-label needs O(n) rounds, large-star/
-    small-star must finish within ~log2(n) alternations (15 ≫ log2(1000))."""
-    from localitysensitivesketch_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    n = 1000
+def _chain(spark, n):
     verts = spark.range(n).withColumnRenamed("id", "doc_id")
     edges = spark.range(n - 1).select(
         F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
     )
-    out = connected_components_star(verts, edges, max_iter=15).collect()
+    return verts, edges
+
+
+def test_cc_star_path_graph_converges_in_log_rounds(spark):
+    """1000-node path graph: min-label would need O(n) rounds, large-star/
+    small-star must finish within ~log2(n) alternations (15 ≫ log2(1000))."""
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+
+    n = 1000
+    verts, edges = _chain(spark, n)
+    out = connected_components(verts, edges, max_iter=15).collect()
     assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
 
 
-def test_cc_label_and_star_agree_on_random_graph(spark):
+def test_cc_default_merges_200_node_chain(spark):
+    """A chain of near-duplicate versions longer than any fixed round cap
+    of min-label propagation must still come back as ONE cluster under
+    the default arguments."""
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+
+    verts, edges = _chain(spark, 200)
+    out = connected_components(verts, edges).collect()
+    assert len(out) == 200
+    assert {r["cluster_id"] for r in out} == {0}
+
+
+def test_cc_raises_when_not_converged(spark):
+    """Hitting the round cap is an error, never partial labels."""
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+
+    verts, edges = _chain(spark, 200)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(verts, edges, max_iter=1)
+
+
+def test_cc_matches_union_find_on_random_graph(spark):
     from localitysensitivesketch_spark.operators.cluster import connected_components
 
     rng = np.random.default_rng(7)
@@ -636,17 +660,29 @@ def test_cc_label_and_star_agree_on_random_graph(spark):
         for a, b in rng.integers(0, n, size=(250, 2))
         if a != b
     ]
+    # reference: union-find with the min id as each set's root
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {v: find(v) for v in range(n)}
+
     verts = spark.range(n).withColumnRenamed("id", "doc_id")
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
-    lab = {
+    got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, algorithm="label").collect()
+        for r in connected_components(verts, edf).collect()
     }
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, algorithm="star").collect()
-    }
-    assert lab == star and len(lab) == n
+    assert got == expected
+    assert len(set(expected.values())) < n  # the graph has real components
 
 
 def test_ngram_prefix_filter_is_exact(spark):
@@ -737,7 +773,7 @@ def test_driver_contract_oracle_coverage():
 def test_cc_reliable_checkpoint_same_labels(spark, tmp_path):
     """checkpoint_dir routes round truncation through reliable
     ``checkpoint()`` — the loop survives with it enabled and the labels are
-    identical to the localCheckpoint default, for both algorithms."""
+    identical to the localCheckpoint default."""
     import os
 
     from localitysensitivesketch_spark.operators.cluster import (
@@ -748,18 +784,15 @@ def test_cc_reliable_checkpoint_same_labels(spark, tmp_path):
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
     verts = spark.range(45).select(F.col("id").alias("doc_id"))
     ckdir = str(tmp_path / "cc_reliable")
-    for algo in ("label", "star"):
-        base = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components(verts, edf, algorithm=algo).collect()
-        }
-        rel = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components(
-                verts, edf, algorithm=algo, checkpoint_dir=ckdir
-            ).collect()
-        }
-        assert base == rel, algo
+    base = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(verts, edf).collect()
+    }
+    rel = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(verts, edf, checkpoint_dir=ckdir).collect()
+    }
+    assert base == rel
     assert os.listdir(ckdir)  # reliable checkpoint files actually landed
 
 
