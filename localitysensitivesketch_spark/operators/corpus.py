@@ -1,11 +1,11 @@
 """Corpus-level hygiene operators for a web-text training pipeline.
 
 Operators a 100 TB pre-training pipeline runs alongside document dedup.
-Each has an exact ANSI-SQL oracle; per-gram/per-window scans default to
-vectorized Arrow ``mapInPandas`` (Spark evaluates higher-order-function
-lambdas interpreted per element — measured 18-40× slower than the Arrow
-scans at 20k docs — so the pure-built-in forms are kept as
-``method="sql"`` reference paths, bit-identical by test):
+Each has an exact ANSI-SQL oracle; per-gram/per-window scans are
+vectorized Arrow ``mapInPandas`` passes (Spark evaluates
+higher-order-function lambdas interpreted per element — the pure-built-in
+forms measured 18-40× slower at 20k docs; they live on only as the
+test-side references the Arrow scans are pinned bit-identical to):
 
 - **Cross-document segment dedup** (C4-style, Raffel et al. JMLR'20 §2.2
   "we discard all but one of any three-sentence span occurring more than
@@ -47,8 +47,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.bloom import bloom_build, bloom_supported, might_contain
-from ..session import auto_prefilter_enabled, ensure_min_partitions
+from ..functions.bloom import bloom_prefilter
+from ..session import ensure_min_partitions
 
 
 def _tokens(text_col: str) -> Column:
@@ -227,7 +227,6 @@ def repetition_stats(
     ns: tuple[int, ...] = (2, 3),
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """Gopher-style within-document repetition ratios, long format.
 
@@ -237,97 +236,61 @@ def repetition_stats(
     the most frequent n-gram's share.  Docs shorter than n tokens emit no
     row for that n.
 
-    The statistic is strictly per-document, so ``method="arrow"``
-    (default) computes it in one ``mapInPandas`` pass — an exact
-    ``Counter`` over token n-gram tuples per doc (no hashing shortcuts),
-    ZERO shuffles (the sql path exchanges every (doc_id, gram) row), and
-    none of the interpreted higher-order-function cost (measured ~18× at
-    20k docs).  The ratio/rounding tail stays JVM-side in both methods,
-    so outputs are bit-identical and the DuckDB oracle is method-blind.
-
-    ``method="sql"``: one explode over all requested n simultaneously
-    (grams carry an ``n:`` tag so a single (doc_id, gram) hash-agg serves
-    every n); the agg is keyed by doc_id so there are no cross-document
-    hot keys.  The pure-built-in reference path.
+    The statistic is strictly per-document, so it is computed in one
+    ``mapInPandas`` pass — an exact ``Counter`` over token n-gram tuples
+    per doc (no hashing shortcuts), ZERO shuffles, and none of the
+    interpreted higher-order-function cost of an explode-and-aggregate
+    form (measured ~18× at 20k docs).  The ratio/rounding tail
+    (:func:`_repetition_ratios`) stays JVM-side, so the DuckDB oracle's
+    divisions round identically.
     """
-    if method == "arrow":
-        ns_tuple = tuple(int(n) for n in ns)
+    ns_tuple = tuple(int(n) for n in ns)
 
-        def per_doc(batches):
-            from collections import Counter
+    def per_doc(batches):
+        from collections import Counter
 
-            import pandas as pd
+        import pandas as pd
 
-            for pdf in batches:
-                doc_out, n_out, g_out, d_out, t_out = [], [], [], [], []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    if text is None:
+        for pdf in batches:
+            doc_out, n_out, g_out, d_out, t_out = [], [], [], [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
+                toks = _py_tokens(text)
+                for n in ns_tuple:
+                    m = len(toks) - n + 1
+                    if m <= 0:
                         continue
-                    toks = _py_tokens(text)
-                    for n in ns_tuple:
-                        m = len(toks) - n + 1
-                        if m <= 0:
-                            continue
-                        c = Counter(zip(*(toks[i:] for i in range(n))))
-                        doc_out.append(doc_id)
-                        n_out.append(n)
-                        g_out.append(m)
-                        d_out.append(m - len(c))
-                        t_out.append(max(c.values()))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(doc_out),
-                        "gram_n": pd.Series(n_out, dtype="int32"),
-                        "n_grams": pd.Series(g_out, dtype="int64"),
-                        "n_dup_grams": pd.Series(d_out, dtype="int64"),
-                        "top_c": pd.Series(t_out, dtype="int64"),
-                    }
-                )
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        agg = ensure_min_partitions(
-            df.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+                    c = Counter(zip(*(toks[i:] for i in range(n))))
+                    doc_out.append(doc_id)
+                    n_out.append(n)
+                    g_out.append(m)
+                    d_out.append(m - len(c))
+                    t_out.append(max(c.values()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(doc_out),
+                    "gram_n": pd.Series(n_out, dtype="int32"),
+                    "n_grams": pd.Series(g_out, dtype="int64"),
+                    "n_dup_grams": pd.Series(d_out, dtype="int64"),
+                    "top_c": pd.Series(t_out, dtype="int64"),
+                }
             )
-        ).mapInPandas(
-            per_doc,
-            f"doc_id {id_type}, gram_n int, n_grams long, n_dup_grams long, "
-            "top_c long",
-        )
-    elif method == "sql":
-        t = _tokens(text_col)
 
-        def _tagged(n: int) -> Column:
-            # NOTE: the transform lambda must be single-parameter — a
-            # second parameter would be interpreted as the element index
-            # by Spark.
-            return F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-                    lambda i: F.concat(
-                        F.lit(f"{n}:"), F.array_join(F.slice(t, i, n), " ")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
+    id_type = df.schema[id_col].dataType.simpleString()
+    agg = ensure_min_partitions(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    ).mapInPandas(
+        per_doc,
+        f"doc_id {id_type}, gram_n int, n_grams long, n_dup_grams long, "
+        "top_c long",
+    )
+    return _repetition_ratios(agg)
 
-        tagged = [_tagged(n) for n in ns]
-        rows = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.concat(*tagged)).alias("g"),
-        )
-        cnt = rows.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
-        agg = (
-            cnt.withColumn("gram_n", F.split("g", ":", 2)[0].cast("int"))
-            .groupBy("doc_id", "gram_n")
-            .agg(
-                F.sum("c").alias("n_grams"),
-                (F.sum("c") - F.count("*")).alias("n_dup_grams"),
-                F.max("c").alias("top_c"),
-            )
-        )
-    else:
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
+
+def _repetition_ratios(agg: DataFrame) -> DataFrame:
+    """Ratio/round tail of :func:`repetition_stats` over the per-(doc, n)
+    counts ``(doc_id, gram_n, n_grams, n_dup_grams, top_c)``."""
     return agg.select(
         "doc_id",
         "gram_n",
@@ -338,38 +301,12 @@ def repetition_stats(
     )
 
 
-def _gram_hashes(
-    df: DataFrame, n: int, id_col: str, text_col: str, method: str = "arrow"
-) -> DataFrame:
-    """(doc_id, h) — content hash of every sliding token n-gram (docs
-    with < n tokens emit nothing).  A token n-gram IS a sliding window,
-    so ``method="arrow"`` delegates to the vectorized rolling-hash scan
-    of :func:`sliding_window_occurrences` (16-byte binary h); the
-    ``"sql"`` path keeps the pure-built-in md5 hex form.  Hash equality
-    is gram equality under either, but the two forms are not mutually
-    joinable — use ONE method for both sides of any join."""
-    if method == "arrow":
-        return sliding_window_occurrences(
-            df, n, id_col, text_col, method="arrow"
-        ).select("doc_id", "h")
-    t = _tokens(text_col)
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-            lambda i: F.md5(F.array_join(F.slice(t, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("h"))
-
-
 def contamination_report(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """GPT-3-style decontamination: training docs sharing >= 1 token
     n-gram with the benchmark set (Brown et al. 2020 Appendix C uses
@@ -377,17 +314,31 @@ def contamination_report(
     31-token vocabulary needs n=4 to be non-degenerate).
 
     Output: (doc_id, n_shared_grams) — distinct contaminated grams per
-    flagged training doc.  The benchmark gram set is distinct-hashed and
-    **broadcast**, so the training side is filtered map-side before its
-    only shuffle (the distinct on surviving (doc_id, h) pairs): at 100 TB
-    the full-corpus side never exchanges a non-matching row.  ``method``
-    picks the gram scan (:func:`_gram_hashes`) for BOTH sides; outputs
-    are identical either way.
+    flagged training doc.  A token n-gram IS a sliding window, so both
+    sides' gram hashes come from the rolling-hash scan of
+    :func:`sliding_window_occurrences`.  The benchmark gram set is
+    distinct-hashed and **broadcast**, so the training side is filtered
+    map-side before its only shuffle (the distinct on surviving
+    (doc_id, h) pairs): at 100 TB the full-corpus side never exchanges a
+    non-matching row.
     """
-    ev = _gram_hashes(benchmark, n, id_col, text_col, method).select("h").distinct()
-    tr = _gram_hashes(train, n, id_col, text_col, method)
+
+    def grams(side: DataFrame) -> DataFrame:
+        return sliding_window_occurrences(side, n, id_col, text_col).select(
+            "doc_id", "h"
+        )
+
+    return _shared_grams(grams(train), grams(benchmark))
+
+
+def _shared_grams(
+    train_grams: DataFrame, bench_grams: DataFrame
+) -> DataFrame:
+    """Join tail of :func:`contamination_report` over two ``(doc_id, h)``
+    gram-hash frames of the same hash form."""
+    ev = bench_grams.select("h").distinct()
     return (
-        tr.join(F.broadcast(ev), "h")
+        train_grams.join(F.broadcast(ev), "h")
         .select("doc_id", "h")
         .distinct()
         .groupBy("doc_id")
@@ -404,7 +355,7 @@ def _gopher_doc_counts_arrow(
     """One ``mapInPandas`` pass computing EVERY per-doc integer count the
     quality gate needs (token/char/punct/stopword counts + 2/3-gram
     totals and dup counts) — the ratio/round tail stays JVM-side so the
-    outputs are bit-identical to the pure-built-in path.  The python
+    outputs are bit-identical to the pure-built-in reference form.  The python
     count replicas are ASCII-exact vs the Spark expressions
     (:func:`_py_tokens` tokenizer; ``re.ASCII`` classes match Java's
     default ASCII ``\\w``/``\\s``; ``len(text)`` matches ``F.length``'s
@@ -474,7 +425,6 @@ def gopher_filter(
     min_stopword_ratio: float = 0.01,
     max_dup_2gram_frac: float = 0.20,
     max_dup_3gram_frac: float = 0.18,
-    method: str = "arrow",
 ) -> DataFrame:
     """Gopher-style quality gate (Rae et al. 2021 Table A1 shape): every
     rule evaluated per document, composed into one keep/drop decision with
@@ -487,78 +437,48 @@ def gopher_filter(
     comma-joined failed slugs in fixed alphabetical order (empty string
     when keep), so the result is deterministic and SQL-comparable.
 
-    ``method="arrow"`` (default): ONE vectorized per-doc pass computes
-    every integer count the rules need
-    (:func:`_gopher_doc_counts_arrow`) — a single text scan, ZERO
+    ONE vectorized per-doc pass computes every integer count the rules
+    need (:func:`_gopher_doc_counts_arrow`) — a single text scan, ZERO
     shuffles, and none of the interpreted higher-order-function cost of
-    the per-token stopword lambda / per-gram explode (the same 18-40×
+    a per-token stopword lambda / per-gram explode (the same 18-40×
     class :func:`repetition_stats` documents).  The python count
     replicas are ASCII-exact vs the Java expressions (pinned by a parity
-    test on real + adversarial corpora including BMP unicode).
-
-    ``method="sql"`` (pure-built-in reference path, oracle-mirroring):
-    two scans of the pruned (id, text) projection — one computes every
-    per-row ratio in a single select, the other feeds the per-doc n-gram
-    aggregates of :func:`repetition_stats`.  The only shuffles carry
-    (doc_id, gram) rows and the tiny per-doc stat rows — text itself
-    never shuffles.  In BOTH methods the ratio/round tail is the same
-    JVM expression, so outputs are bit-identical, and a row whose ratio
-    is undefined (empty/null text) never fires that ratio's rule.
+    test on real + adversarial corpora including BMP unicode).  The
+    ratio/round and rule tail (:func:`_gopher_rules`) is JVM-side, and a
+    row whose ratio is undefined (empty/null text) never fires that
+    ratio's rule.
     """
-    from .textstats import _PUNCT_PAT
+    counts = _gopher_doc_counts_arrow(df, id_col, text_col)
+    ratios = counts.select(
+        "doc_id",
+        "n_tokens",
+        F.try_divide("n_chars", "n_tokens").alias("chars_per_token"),
+        F.try_divide("n_punct", "n_chars").alias("punct_ratio"),
+        F.try_divide("n_stop", "n_tokens").alias("stopword_ratio"),
+        F.round(F.col("d2") / F.col("g2"), 6).alias("dup2"),
+        F.round(F.col("d3") / F.col("g3"), 6).alias("dup3"),
+    )
+    return _gopher_rules(
+        ratios, min_tokens, max_tokens, min_chars_per_token,
+        max_chars_per_token, max_punct_ratio, min_stopword_ratio,
+        max_dup_2gram_frac, max_dup_3gram_frac,
+    )
 
-    if method == "arrow":
-        counts = _gopher_doc_counts_arrow(df, id_col, text_col)
-        j = counts.select(
-            "doc_id",
-            "n_tokens",
-            F.try_divide("n_chars", "n_tokens").alias("chars_per_token"),
-            F.try_divide("n_punct", "n_chars").alias("punct_ratio"),
-            F.try_divide("n_stop", "n_tokens").alias("stopword_ratio"),
-            F.round(F.col("d2") / F.col("g2"), 6).alias("dup2"),
-            F.round(F.col("d3") / F.col("g3"), 6).alias("dup3"),
-        )
-    elif method == "sql":
-        text = F.col(text_col)
-        toks = F.split(F.trim(text), r"\s+")
-        n_tokens = F.size(toks)
-        n_chars = F.length(text)
-        n_punct = F.size(
-            F.expr(f"regexp_extract_all({text_col}, '{_PUNCT_PAT}', 0)")
-        )
-        sw = ",".join(f"'{w}'" for w in _GOPHER_STOPWORDS)
-        n_stop = F.size(
-            F.expr(
-                f"filter(split(lower(trim({text_col})), '\\\\s+'), "
-                f"t -> t IN ({sw}))"
-            )
-        )
-        # try_divide: an empty/whitespace doc has 0 chars or 0 tokens — the
-        # ratio is then NULL (rule not triggered) instead of an ANSI
-        # divide-by-zero error; such docs still fail the n_tokens rule
-        per_row = df.select(
-            F.col(id_col).alias("doc_id"),
-            n_tokens.alias("n_tokens"),
-            F.try_divide(n_chars, n_tokens).alias("chars_per_token"),
-            F.try_divide(n_punct, n_chars).alias("punct_ratio"),
-            F.try_divide(n_stop, n_tokens).alias("stopword_ratio"),
-        )
-        reps = (
-            repetition_stats(df, ns=(2, 3), id_col=id_col,
-                             text_col=text_col, method="sql")
-            .groupBy("doc_id")
-            .agg(
-                F.max(
-                    F.when(F.col("gram_n") == 2, F.col("dup_frac"))
-                ).alias("dup2"),
-                F.max(
-                    F.when(F.col("gram_n") == 3, F.col("dup_frac"))
-                ).alias("dup3"),
-            )
-        )
-        j = per_row.join(reps, "doc_id", "left")
-    else:
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
+
+def _gopher_rules(
+    j: DataFrame,
+    min_tokens: int,
+    max_tokens: int,
+    min_chars_per_token: float,
+    max_chars_per_token: float,
+    max_punct_ratio: float,
+    min_stopword_ratio: float,
+    max_dup_2gram_frac: float,
+    max_dup_3gram_frac: float,
+) -> DataFrame:
+    """Rule tail of :func:`gopher_filter` over the per-doc ratios
+    ``(doc_id, n_tokens, chars_per_token, punct_ratio, stopword_ratio,
+    dup2, dup3)``."""
     # slugs in fixed alphabetical order so reasons is deterministic and
     # reproducible in plain SQL without a sort
     checks = [
@@ -592,7 +512,6 @@ def sliding_window_occurrences(
     window_tokens: int = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """(doc_id, pos, h) for EVERY ``window_tokens``-token sliding window
     (pos is the 0-based token offset; h is a 16-byte content hash of the
@@ -607,52 +526,23 @@ def sliding_window_occurrences(
     aggregation — embarrassingly parallel, no co-location, no driver
     state.
 
-    ``method="arrow"`` (default): Arrow-batched ``mapInPandas``.  Each
-    distinct token is hashed ONCE (blake2b-128, memoized per batch), then
-    every window hash is a pair of independent polynomial rolling hashes
-    over the token ids, evaluated via modular-inverse prefix sums in
-    numpy with natural uint64 wraparound — O(n) token hashes + O(n)
-    word-ops per doc instead of O(n·w) string building + O(n) md5
-    calls.  Measured ~40× the
-    ``method="sql"`` scan (Spark evaluates higher-order-function lambdas
-    interpreted, per element — the per-window ``slice``+``array_join``+
-    ``md5`` costs ~90 µs/window; same pitfall as row-Python UDFs but
-    JVM-side).  Same hash-collision stance as the winnowing pass
+    Arrow-batched ``mapInPandas``.  Each distinct token is hashed ONCE
+    (blake2b-128, memoized per batch), then every window hash is a pair
+    of independent polynomial rolling hashes over the token ids,
+    evaluated via modular-inverse prefix sums in numpy with natural
+    uint64 wraparound — O(n) token hashes + O(n) word-ops per doc
+    instead of O(n·w) string building + O(n) md5 calls.  Measured ~40×
+    the pure-built-in ``transform`` + ``md5`` form (Spark evaluates
+    higher-order-function lambdas interpreted, per element — the
+    per-window ``slice``+``array_join``+``md5`` costs ~90 µs/window;
+    same pitfall as row-Python UDFs but JVM-side), which survives only
+    as the test-side reference: both yield identical (doc_id, pos)
+    duplicate sets, only the opaque hash bytes differ.  Same
+    hash-collision stance as the winnowing pass
     (``operators/substring.py``): 128 independent polynomial bits ⇒
     cross-window collisions are negligible at any corpus size.
-
-    ``method="sql"``: pure built-in expression (``transform`` +
-    ``md5``), zero Python workers — the reference path the DuckDB oracle
-    mirrors; use it for plan-audit or tiny inputs.
-
-    Both methods produce identical (doc_id, pos) duplicate sets — only
-    the opaque hash bytes differ (md5 vs rolling) — so every downstream
-    operator is method-agnostic.
     """
     w = int(window_tokens)
-    if method == "sql":
-        t = _tokens(text_col)
-        n = F.size(t)
-        wins = F.when(
-            n >= w,
-            F.transform(
-                F.sequence(F.lit(0), n - w),
-                lambda i: F.struct(
-                    i.cast("int").alias("pos"),
-                    F.unhex(
-                        F.md5(F.array_join(F.slice(t, i + 1, w), " "))
-                    ).alias("h"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<pos:int,h:binary>>"))
-        return (
-            df.select(F.col(id_col).alias("doc_id"), F.explode(wins).alias("w"))
-            .select(
-                "doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h")
-            )
-        )
-    if method != "arrow":
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
 
     def scan(batches):
         import hashlib
@@ -752,7 +642,7 @@ def sliding_window_occurrences(
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
-                toks = _py_tokens(text)  # bit-exact vs the sql path
+                toks = _py_tokens(text)  # bit-exact vs Spark's split(trim)
                 n = len(toks)
                 if n < w:
                     continue
@@ -798,8 +688,8 @@ def sliding_window_occurrences(
                 }
             )
 
-    # the id column keeps its incoming Spark type (sql-path parity: any
-    # joinable id works, not just bigint)
+    # the id column keeps its incoming Spark type (any joinable id works,
+    # not just bigint)
     id_type = df.schema[id_col].dataType.simpleString()
     pruned = ensure_min_partitions(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -814,8 +704,6 @@ def duplicate_span_hits(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """(doc_id, pos) occurrences of duplicated ``window_tokens``-token
     windows — the positions :func:`remove_duplicate_spans` cuts.
@@ -832,35 +720,40 @@ def duplicate_span_hits(
     as the reference ExactSubstr implementation, which cuts the union of
     duplicated ranges).
 
-    Shuffle shape (``prefilter="off"``): ONE hash aggregation over (h)
-    computes dup-ness AND the keeper (min (doc_id, pos)) together with
-    map-side combine, then a fact-dim join of occurrences against the
-    aggregated dup rows (hot boilerplate hashes are single rows after the
-    agg; AQE handles residual skew).  Text never moves.  The window scan
-    itself executes exactly twice (agg side + join side) — at corpus
-    scale that re-scan is the right trade against materializing
-    O(total-tokens) hash rows.
+    Plain shape (inputs under the bloom pre-filter's size floor): ONE
+    hash aggregation over (h) computes dup-ness AND the keeper (min
+    (doc_id, pos)) together with map-side combine, then a fact-dim join
+    of occurrences against the aggregated dup rows (hot boilerplate
+    hashes are single rows after the agg; AQE handles residual skew).
+    Text never moves.  The window scan itself executes exactly twice
+    (agg side + join side) — at corpus scale that re-scan is the right
+    trade against materializing O(total-tokens) hash rows.
 
-    ``prefilter="auto"`` (default, falls back to ``"off"`` when the
-    bloom expressions are unavailable) adds the singleton-window
-    pre-filter — the reference's filter-before-shuffle pattern
-    (``Pub4PCapStreamKVTable.java:360-374``): windows whose hash occurs
-    ONCE globally (the overwhelming majority of a real corpus) currently
-    ride the full join shuffle just to be dropped by it.  Two-pass shape:
-    (1) aggregate hash-only dup-ness (no keeper, so ``pos`` stays out of
-    the shuffle); (2) build a distributed bloom filter over the dup
-    hashes (bounded bytes on the driver; FPs harmless — the exact join
-    stays), probe it MAP-SIDE on the re-scan so only dup-hash occurrences
-    enter the join shuffle, and compute the keeper over those hits (min
-    over a dup hash's hits ≡ min over all its occurrences).  Outputs are
-    identical under every setting (pinned by tests); only shuffle bytes
-    change.
+    Bloom shape (past the floor, when
+    :func:`~..functions.bloom.bloom_prefilter` takes it) adds the
+    singleton-window pre-filter — the reference's filter-before-shuffle
+    pattern (``Pub4PCapStreamKVTable.java:360-374``): windows whose hash
+    occurs ONCE globally (the overwhelming majority of a real corpus)
+    otherwise ride the full join shuffle just to be dropped by it.
+    Two-pass shape: (1) aggregate hash-only dup-ness (no keeper, so
+    ``pos`` stays out of the shuffle); (2) build a distributed bloom
+    filter over the dup hashes (bounded bytes on the driver; FPs
+    harmless — the exact join stays), probe it MAP-SIDE on the re-scan so
+    only dup-hash occurrences enter the join shuffle, and compute the
+    keeper over those hits (min over a dup hash's hits ≡ min over all
+    its occurrences).  Both shapes give identical outputs (pinned by
+    tests); only shuffle bytes change.
     """
-    if prefilter not in ("auto", "bloom", "off"):
-        raise ValueError(
-            f"prefilter must be 'auto', 'bloom' or 'off', got {prefilter!r}"
-        )
-    occ = sliding_window_occurrences(df, window_tokens, id_col, text_col, method)
+    occ = sliding_window_occurrences(df, window_tokens, id_col, text_col)
+    return _span_hits(df, occ, scope, keep_first)
+
+
+def _span_hits(
+    df: DataFrame, occ: DataFrame, scope: str, keep_first: bool
+) -> DataFrame:
+    """Hits step of :func:`duplicate_span_hits` over the window
+    occurrences ``occ`` (doc_id, pos, h) of ``df``, which the plan
+    decision is taken on."""
     # dup-ness aggregates: "≥2 distinct docs" ⟺ min(doc_id) != max(doc_id),
     # which is a plain single-phase partial aggregation — count_distinct
     # plans as a two-level aggregate keyed on (h, doc_id).  NULL ids match
@@ -878,18 +771,12 @@ def duplicate_span_hits(
     else:
         raise ValueError(f"scope must be 'docs' or 'occurrences', got {scope!r}")
 
-    # "auto" takes the bloom plan only past a corpus-size floor: on tiny
-    # inputs the filter's fixed extra stages cost ~4× the whole query for
-    # zero shuffle saved (r4: 0.55 s → 2.2 s at 5k docs), while at 200k
-    # docs it cut shuffle writes 47%.  Unknown size ⇒ assume large (the
-    # scale path must stay on by default).  "bloom" forces it regardless.
-    if prefilter == "auto":
-        if not auto_prefilter_enabled(df):
-            prefilter = "off"
-    use_bloom = prefilter in ("auto", "bloom") and bloom_supported(
-        df.sparkSession
-    )
-    if use_bloom:
+    # the bloom shape only past a corpus-size floor: on tiny inputs the
+    # filter's fixed extra stages cost ~4× the whole query for zero
+    # shuffle saved (r4: 0.55 s → 2.2 s at 5k docs), while at 200k docs
+    # it cut shuffle writes 47%
+    prefilter = bloom_prefilter(df)
+    if prefilter is not None:
         # pass 1: dup-ness only — the narrowest possible shuffle rows
         # (per-partition-combined (h, min, max) / (h, n) rows)
         dup_h = (
@@ -898,21 +785,11 @@ def duplicate_span_hits(
         # two consumers (bloom agg + exact join) of an expensive agg —
         # materialize once; dup-hash rows are the SMALL side by design
         dup_h = dup_h.localCheckpoint(eager=True)
-        n_dup = dup_h.count()
-        bloom_bytes = (
-            bloom_build(
-                dup_h.select(F.xxhash64("h").alias("hk")), "hk",
-                expected_items=max(n_dup, 1),
-            )
-            if n_dup
-            else None
-        )
-        occ_probe = occ
-        if bloom_bytes is not None:
-            occ_hk = occ.withColumn("hk", F.xxhash64("h"))
-            pred = might_contain(occ_hk, "hk", bloom_bytes)
-            if pred is not None:
-                occ_probe = occ_hk.filter(pred).drop("hk")
+        occ_probe = prefilter(
+            occ.withColumn("hk", F.xxhash64("h")),
+            dup_h.select(F.xxhash64("h").alias("hk")),
+            "hk",
+        ).drop("hk")
         # pass 2: exact join (removes bloom FPs) over the pre-filtered
         # re-scan, keeper computed from the (small) dup hits
         hits_all = occ_probe.join(dup_h, "h")
@@ -992,8 +869,6 @@ def remove_duplicate_spans(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """ExactSubstr dedup as a corpus transformation: cut every duplicated
     ≥``window_tokens``-token span (any offset — sliding windows, unlike
@@ -1010,8 +885,7 @@ def remove_duplicate_spans(
     slice per gap between spans) in the document's scan stage.
     """
     hits = duplicate_span_hits(
-        df, window_tokens, scope, keep_first, id_col, text_col, method,
-        prefilter,
+        df, window_tokens, scope, keep_first, id_col, text_col
     )
     per_doc = hits.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("pos")).alias("ps")
@@ -1072,8 +946,6 @@ def duplicate_span_stats(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """Per-document audit of the ExactSubstr cut: ``(doc_id, n_tokens,
     tokens_removed, frac_removed)`` for every document (zero rows
@@ -1082,8 +954,7 @@ def duplicate_span_stats(
     the union of hit windows, which the SQL oracle recomputes
     independently as a distinct-count over exploded window indices."""
     cleaned = remove_duplicate_spans(
-        df, window_tokens, scope, keep_first, id_col, text_col, method,
-        prefilter,
+        df, window_tokens, scope, keep_first, id_col, text_col
     )
     n = F.size(_tokens(text_col))
     return cleaned.select(

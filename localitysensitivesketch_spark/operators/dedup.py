@@ -366,7 +366,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     cfg: SketchConfig | None = None,
     probe_k: int = 3,
-    prefilter: str = "auto",
     materialize: str = "auto",
 ) -> DataFrame:
     """Directional token-set containment: every ordered pair with
@@ -410,8 +409,9 @@ def containment_pairs(
     so the pigeonhole bound is preserved).  The document-frequency rank
     join broadcasts the vocabulary when it is small enough
     (``VOCAB_BROADCAST_MAX_ROWS``), the inverted index is pre-filtered
-    map-side by a Bloom filter built over the distinct probe keys
-    (``prefilter="auto"``; the filter-before-shuffle pattern of
+    map-side by a Bloom filter built over the probe keys
+    (:func:`~..functions.bloom.bloom_prefilter`, taken past its
+    corpus-size floor; the filter-before-shuffle pattern of
     ``Pub4PCapStreamKVTable.java:360-374``) so only index rows that can
     meet a probe enter the join shuffle, and the per-pair hit counter is
     a plain ``count(*)`` — (doc, key) rows are unique per side up to
@@ -454,10 +454,6 @@ def containment_pairs(
     k = int(probe_k)
     if k < 1:
         raise ValueError(f"probe_k must be ≥ 1, got {probe_k}")
-    if prefilter not in ("auto", "bloom", "off"):
-        raise ValueError(
-            f"prefilter must be 'auto', 'bloom' or 'off', got {prefilter!r}"
-        )
     if materialize not in ("auto", "base", "none"):
         raise ValueError(
             f"materialize must be 'auto', 'base' or 'none', got {materialize!r}"
@@ -613,37 +609,20 @@ def containment_pairs(
         prefix = prefix_main.unionByName(prefix_fb)
     else:
         prefix = _topk(ranked)
-    from ..functions.bloom import bloom_build, bloom_supported, might_contain
+    from ..functions.bloom import bloom_prefilter
     from .candidates import probe_index_pairs
 
     # two consumers (bloom build + the probe join) of the expensive
     # rank-and-prefix aggregation
     prefix = prefix.localCheckpoint(eager=False)
+    # the inverted index only matters where a probe key can meet it: past
+    # the corpus-size floor, bloom-filter the corpus-sized token stream
+    # MAP-SIDE before the join shuffle (FPs harmless — the equi-join
+    # stays exact)
     index = tok
-    # "auto" takes the bloom index prefilter only past a corpus-size
-    # floor — its fixed stages (probe count + filter build) cost more
-    # than they save on tiny inputs; unknown size ⇒ assume large so the
-    # scale path stays on by default.  "bloom" forces it regardless.
-    if prefilter == "auto":
-        from ..session import auto_prefilter_enabled
-
-        if not auto_prefilter_enabled(df):
-            prefilter = "off"
-    if prefilter in ("auto", "bloom") and bloom_supported(df.sparkSession):
-        # the inverted index only matters where a probe key can meet it:
-        # bloom-filter the corpus-sized token stream MAP-SIDE before the
-        # join shuffle (FPs harmless — the equi-join stays exact)
-        n_probe = prefix.count()
-        bloom_bytes = (
-            bloom_build(prefix.select("key"), "key",
-                        expected_items=max(n_probe, 1))
-            if n_probe
-            else None
-        )
-        if bloom_bytes is not None:
-            pred = might_contain(tok, "key", bloom_bytes)
-            if pred is not None:
-                index = tok.filter(pred)
+    prefilter = bloom_prefilter(df)
+    if prefilter is not None:
+        index = prefilter(tok, prefix.select("key"), "key")
     # distinct=False: (doc, key) rows are unique per side up to hash
     # collisions (array_distinct upstream), so the pair stream carries
     # no duplicates the count aggregation below wouldn't absorb —

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
-from ..functions.bloom import bloom_build, bloom_supported, might_contain
+from ..functions.bloom import bloom_prefilter
 from ..operators.candidates import pairs_by_key
 from ..operators.cluster import merge_components
 from ..operators.signatures import compute_signatures
@@ -84,21 +84,14 @@ def incremental_update(
     )
     # M2 Bloom pre-filter (functions/bloom.py; reference BloomFilter.java:
     # 153-232): old-side band-key rows whose key cannot be among the new
-    # batch's keys are dropped by a codegen'd might_contain BEFORE the
-    # shuffle join — at scale |old| ≫ |new|, so this turns the join's big
-    # side into ~|matching old rows|.  Optional: on failure the plain join
-    # runs (pre-filter is lossless up to false positives, which the join
-    # itself then discards).
-    # probe expression availability BEFORE the sizing count() — on a Spark
-    # build without the internal classes, no job is paid for a filter that
-    # can never be built
-    if bloom_supported(new_keys.sparkSession):
-        n_new_keys = new_keys.count()
-        bloom = bloom_build(new_keys, "key", expected_items=max(n_new_keys, 1))
-        if bloom is not None:
-            pred = might_contain(old_keys, "key", bloom)
-            if pred is not None:
-                old_keys = old_keys.filter(pred)
+    # batch's keys are dropped map-side BEFORE the shuffle join — at scale
+    # |old| ≫ |new|, so this turns the join's big side into ~|matching old
+    # rows|.  Decided on the committed signature table it probes, so a
+    # merge into a small store skips the sizing count and filter build;
+    # lossless either way (FPs are discarded by the exact join).
+    prefilter = bloom_prefilter(old_sigs)
+    if prefilter is not None:
+        old_keys = prefilter(old_keys, new_keys, "key")
     no_pairs = (
         new_keys.join(old_keys, "key")
         .filter(F.col("doc_id") != F.col("old_id"))

@@ -79,24 +79,6 @@ def ensure_min_partitions(df, min_partitions: int | None = None):
     return df.repartition(n)
 
 
-#: inputs estimated below this take the plain two-stage plan — the bloom
-#: pre-filters pay a few fixed stages (second agg pass, filter build,
-#: sizing count) that cost more than the whole query on tiny corpora
-#: (measured: duplicate_span_stats 0.55 s → 2.2 s at sf0.1's 5k docs for
-#: zero shuffle saved), while at 200k docs the same filter cut shuffle
-#: writes 47%.  32 MB sits well between those two regimes.
-AUTO_PREFILTER_MIN_BYTES = 32 * 1024 * 1024
-
-
-def auto_prefilter_enabled(df) -> bool:
-    """The shared ``prefilter="auto"`` floor decision: take the bloom
-    plan unless the input is POSITIVELY estimated below
-    :data:`AUTO_PREFILTER_MIN_BYTES` (unknown size ⇒ assume large, keep
-    the scale path on)."""
-    est = estimated_plan_bytes(df)
-    return est is None or est >= AUTO_PREFILTER_MIN_BYTES
-
-
 def estimated_plan_bytes(df) -> int | None:
     """Catalyst's logical-plan size estimate for ``df`` — file sizes for
     scans, exact bytes for local relations; **no job runs**.  ``None``
@@ -182,7 +164,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     master = master or f"local[{cpus}]"
     # local[N]: shuffle partitions ≈ cores; on a real cluster this is set
     # per-job (2-3× total cores) and AQE coalesces at runtime.

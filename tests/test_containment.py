@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from localitysensitivesketch_spark.fixtures import corpus_to_spark, generate_corpus
+from localitysensitivesketch_spark.functions import bloom
 from localitysensitivesketch_spark.operators.dedup import containment_pairs
 from localitysensitivesketch_spark.operators.signatures import with_doc_id
 
@@ -128,21 +129,30 @@ def test_ceil_boundary_pair_not_lost(spark):
     assert (1, 2) in blk
 
 
-def test_containment_prefilter_off_parity(spark):
+def test_containment_prefilter_off_parity(spark, monkeypatch):
     # the bloom index prefilter and the vocab broadcast are scan/shuffle
-    # reductions only — prefilter="off" must produce the identical pair
-    # set on a corpus that exercises both join tiers
+    # reductions only — the plain plan must produce the identical pair
+    # set on a corpus that exercises both join tiers.  Both plans are
+    # forced through the pre-filter's decision: a createDataFrame input
+    # has no size estimate and would always take the filter.
     docs = with_doc_id(
         corpus_to_spark(spark, generate_corpus(n_docs=150, seed=23))
     ).select("doc_id", "text")
-    on = {tuple(r) for r in containment_pairs(docs, 1.0).collect()}
-    off = {
-        tuple(r)
-        for r in containment_pairs(docs, 1.0, prefilter="off").collect()
-    }
+
+    def pairs(on: bool):
+        monkeypatch.setattr(bloom, "auto_prefilter_enabled", lambda df: on)
+        return containment_pairs(docs, 1.0)
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    on_df, off_df = pairs(True), pairs(False)
+    on = {tuple(r) for r in on_df.collect()}
+    off = {tuple(r) for r in off_df.collect()}
     assert on == off and len(on) > 0
-    with pytest.raises(ValueError):
-        containment_pairs(docs, 1.0, prefilter="nope")
+    assert "might_contain" not in plan(off_df)
+    if bloom.bloom_supported(spark):
+        assert "might_contain" in plan(on_df)
 
 
 def test_containment_vocab_shuffle_join_parity(spark, monkeypatch):

@@ -3,11 +3,13 @@ GPT-3 decontamination (operators/corpus.py)."""
 
 from __future__ import annotations
 
+import inspect
 import itertools
 
 from pyspark.sql import functions as F
 
 from localitysensitivesketch_spark.operators import corpus as C
+from tests import sql_reference as R
 
 
 def _docs(spark):
@@ -166,9 +168,10 @@ def test_gopher_filter_empty_text_null_ratio_rules_stay_silent(spark):
 
 
 def test_repetition_and_decontamination_method_parity(spark):
-    """arrow (mapInPandas Counter / rolling-hash grams) and sql (HOF
-    explode) paths must produce bit-identical outputs — the DuckDB oracle
-    mirrors the sql form, so this pins the fast default to the oracle."""
+    """The Arrow scans (mapInPandas Counter / rolling-hash grams) and the
+    test-side sql references (HOF explode), fed through the same library
+    tails, must produce bit-identical outputs — the DuckDB oracle mirrors
+    the sql form, so this pins the library scan to the oracle."""
     from localitysensitivesketch_spark.operators.corpus import (
         contamination_report,
         repetition_stats,
@@ -186,7 +189,8 @@ def test_repetition_and_decontamination_method_parity(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for ns in ((2, 3), (2,), (4,)):
         a = sorted(map(tuple, repetition_stats(df, ns=ns).collect()))
-        s = sorted(map(tuple, repetition_stats(df, ns=ns, method="sql").collect()))
+        ref = C._repetition_ratios(R.repetition_counts(df, ns))
+        s = sorted(map(tuple, ref.collect()))
         assert a == s and (not a) == (len(ns) == 0)
     bench = spark.createDataFrame(
         [(100, "a b a b zz qq"), (101, "x y z unrelated")],
@@ -195,14 +199,19 @@ def test_repetition_and_decontamination_method_parity(spark):
     for n in (2, 3):
         a = sorted(map(tuple, contamination_report(df, bench, n=n).collect()))
         s = sorted(
-            map(tuple, contamination_report(df, bench, n=n, method="sql").collect())
+            map(
+                tuple,
+                C._shared_grams(
+                    R.gram_hashes(df, n), R.gram_hashes(bench, n)
+                ).collect(),
+            )
         )
         assert a == s
         assert a  # non-vacuous: shared grams exist at these n
 
 
 def test_arrow_paths_support_string_ids(spark):
-    """The sql paths never constrained the id type; the arrow defaults
+    """The sql references never constrained the id type; the Arrow scans
     must not either (review finding: doc_id was hard-coded int64)."""
     from localitysensitivesketch_spark.operators.corpus import (
         duplicate_span_hits,
@@ -217,10 +226,18 @@ def test_arrow_paths_support_string_ids(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id string, text string")
     a = sorted(map(tuple, repetition_stats(df, ns=(2,)).collect()))
-    s = sorted(map(tuple, repetition_stats(df, ns=(2,), method="sql").collect()))
+    ref = C._repetition_ratios(R.repetition_counts(df, (2,)))
+    s = sorted(map(tuple, ref.collect()))
     assert a == s and a
     ha = sorted(map(tuple, duplicate_span_hits(df, 3).collect()))
-    hs = sorted(map(tuple, duplicate_span_hits(df, 3, method="sql").collect()))
+    hs = sorted(
+        map(
+            tuple,
+            C._span_hits(
+                df, R.sliding_window_occurrences(df, 3), "docs", True
+            ).collect(),
+        )
+    )
     assert ha == hs and ha
     out = {r["doc_id"]: r["tokens_removed"]
            for r in remove_duplicate_spans(df, 3).collect()}
@@ -229,10 +246,11 @@ def test_arrow_paths_support_string_ids(spark):
 
 def test_gopher_filter_method_parity(spark):
     """Round-4: gopher_filter's single-pass Arrow count path must be
-    bit-identical to the pure-built-in sql path (the DuckDB oracle
-    mirrors the sql form) on real + adversarial rows: empty, whitespace,
-    null text, BMP unicode, punctuation-heavy, repeated grams, single
-    token, leading/trailing whitespace."""
+    bit-identical to the pure-built-in sql reference fed through the same
+    rule tail (the DuckDB oracle mirrors the sql form) on real +
+    adversarial rows: empty, whitespace, null text, BMP unicode,
+    punctuation-heavy, repeated grams, single token, leading/trailing
+    whitespace."""
     rows = [
         (1, " ".join(f"w{i}" for i in range(60))),
         (2, " ".join(["dup gram"] * 40)),
@@ -251,15 +269,21 @@ def test_gopher_filter_method_parity(spark):
     kw = dict(min_tokens=5, min_stopword_ratio=0.01)
     a = sorted(
         (r["doc_id"], r["keep"], r["reasons"])
-        for r in C.gopher_filter(df, method="arrow", **kw).collect()
+        for r in C.gopher_filter(df, **kw).collect()
     )
+    # the reference runs the same rule tail at the gate's thresholds
+    rules = {
+        name: p.default
+        for name, p in inspect.signature(C.gopher_filter).parameters.items()
+        if name not in ("df", "id_col", "text_col")
+    } | kw
     s = sorted(
         (r["doc_id"], r["keep"], r["reasons"])
-        for r in C.gopher_filter(df, method="sql", **kw).collect()
+        for r in C._gopher_rules(R.gopher_ratios(df), **rules).collect()
     )
     assert a == s
     assert len(a) == len(rows)  # null-text docs still present
-    # the arrow default is shuffle-free: no Exchange in the plan
+    # the Arrow gate is shuffle-free: no Exchange in the plan
     plan = (
         C.gopher_filter(df, **kw)._jdf.queryExecution().executedPlan().toString()
     )

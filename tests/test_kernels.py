@@ -192,10 +192,12 @@ def test_recommended_shuffle_partitions_policy():
 
 
 def test_estimated_plan_bytes_and_auto_prefilter_floor(spark, tmp_path):
-    from localitysensitivesketch_spark.session import (
+    from localitysensitivesketch_spark.functions.bloom import (
         AUTO_PREFILTER_MIN_BYTES,
-        estimated_plan_bytes,
+        auto_prefilter_enabled,
+        bloom_supported,
     )
+    from localitysensitivesketch_spark.session import estimated_plan_bytes
 
     # parquet scan: Catalyst stats = file bytes (no job runs)
     p = str(tmp_path / "tiny.parquet")
@@ -204,6 +206,7 @@ def test_estimated_plan_bytes_and_auto_prefilter_floor(spark, tmp_path):
     ).write.parquet(p)
     est = estimated_plan_bytes(spark.read.parquet(p))
     assert est is not None and 0 < est < AUTO_PREFILTER_MIN_BYTES
+    assert not auto_prefilter_enabled(spark.read.parquet(p))
     # python createDataFrame plans as a LogicalRDD with the
     # unknown-stats sentinel → None, which callers treat as "large" so
     # the scale paths stay on by default
@@ -211,6 +214,9 @@ def test_estimated_plan_bytes_and_auto_prefilter_floor(spark, tmp_path):
         spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     )
     assert est2 is None
+    assert auto_prefilter_enabled(
+        spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    ) == bloom_supported(spark)
 
 
 def test_partition_policy_scopes_and_restores_conf(spark, tmp_path):

@@ -8,12 +8,15 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from localitysensitivesketch_spark.functions import bloom
+from localitysensitivesketch_spark.operators import corpus as C
 from localitysensitivesketch_spark.operators.corpus import (
     duplicate_span_hits,
     duplicate_span_stats,
     remove_duplicate_spans,
     sliding_window_occurrences,
 )
+from tests import sql_reference as R
 
 W = 5
 
@@ -49,6 +52,10 @@ def _shadow_hits(docs, w=W, scope="docs", keep_first=True):
     return sorted(hits)
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _shadow_removed(docs, w=W, **kw):
     hits = _shadow_hits(docs, w, **kw)
     per: dict[int, set[int]] = {}
@@ -58,12 +65,11 @@ def _shadow_removed(docs, w=W, **kw):
 
 
 @pytest.mark.parametrize("scope", ["docs", "occurrences"])
-@pytest.mark.parametrize("method", ["arrow", "sql"])
-def test_span_hits_match_python_shadow(spark, scope, method):
+def test_span_hits_match_python_shadow(spark, scope):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["pos"])
-        for r in duplicate_span_hits(df, W, scope=scope, method=method).collect()
+        for r in duplicate_span_hits(df, W, scope=scope).collect()
     )
     assert got == _shadow_hits(DOCS, scope=scope)
 
@@ -140,7 +146,8 @@ def test_window_occurrence_counts(spark):
 
 def test_arrow_and_sql_paths_identical_on_adversarial_whitespace(spark):
     """The arrow scan reimplements split(trim(text), '\\s+') in python; pin
-    bit-exact agreement with the sql path on the cases where python's
+    bit-exact agreement with the sql reference scan (fed through the same
+    hits step) on the cases where python's
     default str.split would silently diverge (unicode NBSP, tabs,
     leading/trailing ASCII whitespace, empty/whitespace-only docs)."""
     docs = [
@@ -160,16 +167,23 @@ def test_arrow_and_sql_paths_identical_on_adversarial_whitespace(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for w in (2, 3):
-        a = sorted(map(tuple, duplicate_span_hits(df, w, method="arrow").collect()))
-        s = sorted(map(tuple, duplicate_span_hits(df, w, method="sql").collect()))
+        a = sorted(map(tuple, duplicate_span_hits(df, w).collect()))
+        s = sorted(
+            map(
+                tuple,
+                C._span_hits(
+                    df, R.sliding_window_occurrences(df, w), "docs", True
+                ).collect(),
+            )
+        )
         assert a == s, f"w={w}: arrow={a} sql={s}"
         assert a, f"w={w}: vacuous fixture"
 
 
-def test_arrow_sql_identity_random_corpora(spark):
-    """Randomized cross-check of the two scan implementations: shared
-    token pool forces plenty of hash-grouped windows; every (doc_id, pos)
-    hit and every per-doc tokens_removed must agree."""
+def test_arrow_sql_identity_random_corpora(spark, monkeypatch):
+    """Randomized cross-check of the Arrow scan against the sql reference
+    scan: shared token pool forces plenty of hash-grouped windows; every
+    (doc_id, pos) hit and every per-doc tokens_removed must agree."""
     import random
 
     rng = random.Random(77)
@@ -181,20 +195,30 @@ def test_arrow_sql_identity_random_corpora(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for w, scope in ((3, "docs"), (4, "occurrences")):
         a = sorted(
-            map(tuple, duplicate_span_hits(df, w, scope=scope, method="arrow").collect())
+            map(tuple, duplicate_span_hits(df, w, scope=scope).collect())
         )
         s = sorted(
-            map(tuple, duplicate_span_hits(df, w, scope=scope, method="sql").collect())
+            map(
+                tuple,
+                C._span_hits(
+                    df, R.sliding_window_occurrences(df, w), scope, True
+                ).collect(),
+            )
         )
         assert a == s
         ra = {
             r["doc_id"]: r["tokens_removed"]
-            for r in duplicate_span_stats(df, w, scope=scope, method="arrow").collect()
+            for r in duplicate_span_stats(df, w, scope=scope).collect()
         }
-        rs = {
-            r["doc_id"]: r["tokens_removed"]
-            for r in duplicate_span_stats(df, w, scope=scope, method="sql").collect()
-        }
+        # the whole stats operator again, with the reference scan swapped in
+        with monkeypatch.context() as m:
+            m.setattr(
+                C, "sliding_window_occurrences", R.sliding_window_occurrences
+            )
+            rs = {
+                r["doc_id"]: r["tokens_removed"]
+                for r in duplicate_span_stats(df, w, scope=scope).collect()
+            }
         assert ra == rs
         assert sum(ra.values()) > 0  # non-vacuous
 
@@ -237,16 +261,12 @@ def test_merged_spans_fold_matches_python_interval_merge(spark):
         assert cover == {x for p in ps for x in range(p, p + w)}
 
 
-def test_span_hits_prefilter_parity_and_plan(spark):
+def test_span_hits_prefilter_parity_and_plan(spark, monkeypatch):
     """Round-4 (VERDICT #4): the singleton-window bloom pre-filter must
-    (a) produce hit sets identical to prefilter='off' under both scopes
+    (a) produce hit sets identical to the plain plan under both scopes
     and keep_first settings, and (b) actually place a might_contain probe
-    before the join shuffle."""
-    from localitysensitivesketch_spark.functions.bloom import bloom_supported
-    from localitysensitivesketch_spark.operators.corpus import (
-        duplicate_span_hits,
-    )
-
+    before the join shuffle.  Both plans are forced through the
+    pre-filter's decision (this input is far under its size floor)."""
     boiler = "subscribe to our newsletter terms of service apply here now"
     docs = spark.createDataFrame(
         [
@@ -258,28 +278,23 @@ def test_span_hits_prefilter_parity_and_plan(spark):
         ],
         "doc_id long, text string",
     )
+
+    def hits(on: bool, **kw):
+        monkeypatch.setattr(bloom, "auto_prefilter_enabled", lambda df: on)
+        return duplicate_span_hits(docs, window_tokens=5, **kw)
+
+    supported = bloom.bloom_supported(spark)
     for scope in ("docs", "occurrences"):
         for keep in (True, False):
-            off = sorted(
-                (r.doc_id, r.pos)
-                for r in duplicate_span_hits(
-                    docs, window_tokens=5, scope=scope, keep_first=keep,
-                    prefilter="off",
-                ).collect()
-            )
-            on = sorted(
-                (r.doc_id, r.pos)
-                for r in duplicate_span_hits(
-                    docs, window_tokens=5, scope=scope, keep_first=keep,
-                    prefilter="bloom",
-                ).collect()
-            )
+            off_df = hits(False, scope=scope, keep_first=keep)
+            on_df = hits(True, scope=scope, keep_first=keep)
+            off = sorted((r.doc_id, r.pos) for r in off_df.collect())
+            on = sorted((r.doc_id, r.pos) for r in on_df.collect())
             assert on == off, (scope, keep)
             assert off  # non-vacuous: the boilerplate run produces hits
-    if bloom_supported(spark):
-        hits = duplicate_span_hits(docs, window_tokens=5, prefilter="bloom")
-        plan = hits._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan
+            assert "might_contain" not in _plan(off_df)
+            if supported:
+                assert "might_contain" in _plan(on_df)
 
 
 def test_arrow_scan_survives_memo_buffer_growth(spark):
@@ -299,7 +314,7 @@ def test_arrow_scan_survives_memo_buffer_growth(spark):
         (2, f"{dup_run} other trailing words"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
-    occ = sliding_window_occurrences(df, w, method="arrow")
+    occ = sliding_window_occurrences(df, w)
     # every window of every doc present, and the planted dup is found
     counts = {r["doc_id"]: r["n"] for r in
               occ.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}

@@ -201,6 +201,50 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
     assert resumed.store.read("signatures").count() == 100
 
 
+def test_incremental_update_prefilter_on_off_identical(
+    spark, tmp_path, monkeypatch
+):
+    """The old-side bloom pre-filter is a shuffle reduction only: forced on
+    and forced off through the pre-filter's decision, incremental_update
+    commits identical tables, and only the filtered run probes
+    might_contain on the old side of the new-vs-old join."""
+    import shutil
+
+    from localitysensitivesketch_spark.functions import bloom
+    from localitysensitivesketch_spark.plans import incremental
+
+    corpus = generate_corpus(n_docs=100, seed=31)
+    docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
+    old_urls = set(sorted(corpus.url)[:60])
+    old_docs = docs.filter(F.col("url").isin(*old_urls)).cache()
+    new_docs = docs.filter(~F.col("url").isin(*old_urls)).cache()
+
+    plans: dict[bool, str] = {}
+    real_verify = incremental.verify_pairs
+
+    def spy_verify(candidates, *a, **kw):
+        plans[on] = candidates._jdf.queryExecution().executedPlan().toString()
+        return real_verify(candidates, *a, **kw)
+
+    monkeypatch.setattr(incremental, "verify_pairs", spy_verify)
+    DedupPipeline(spark, str(tmp_path / "base"), CFG).run(old_docs)
+    tables = {}
+    for on in (True, False):
+        monkeypatch.setattr(bloom, "auto_prefilter_enabled", lambda df: on)
+        root = str(tmp_path / f"inc_{on}")
+        shutil.copytree(tmp_path / "base", root)
+        store = DedupPipeline(spark, root, CFG).store
+        out = incremental_update(store, docs, new_docs, CFG)
+        tables[on] = {
+            k: sorted(map(repr, v.collect())) for k, v in out.items()
+        }
+    assert tables[True] == tables[False]
+    assert tables[False]["edges"]  # non-vacuous: old-vs-new dups exist
+    assert "might_contain" not in plans[False]
+    if bloom.bloom_supported(spark):
+        assert "might_contain" in plans[True]
+
+
 # ---------------------------------------------------------------------------
 # binary KV record source (reference wire format)
 # ---------------------------------------------------------------------------

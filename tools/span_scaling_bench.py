@@ -33,32 +33,7 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
 WINDOW_TOKENS = 50  # ExactSubstr's published window (Lee et al. ACL'22)
 
 
-def _shuffle_bytes(spark) -> dict | None:
-    """Sum shuffle write/read bytes over all completed stages via the UI
-    REST API (enabled only when the bench asks for it)."""
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.load(r)
-        return {
-            "shuffle_write_bytes": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-            "shuffle_read_bytes": sum(s.get("shuffleReadBytes", 0) for s in stages),
-            "n_stages": len(stages),
-        }
-    except Exception:  # metrics are best-effort; the wall numbers stand alone
-        return None
-
-
-def run_level(cpus: int, data: str, prefilter: str = "auto",
-              measure_shuffle: bool = False) -> dict:
+def run_level(cpus: int, data: str) -> dict:
     from pyspark.sql import functions as F
 
     from localitysensitivesketch_spark.operators.corpus import (
@@ -70,15 +45,12 @@ def run_level(cpus: int, data: str, prefilter: str = "auto",
         app_name=f"span-scaling-{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=max(2 * cpus, 8),
-        extra_conf={"spark.ui.enabled": "true"} if measure_shuffle else None,
     )
     docs = spark.read.parquet(data)
     n_docs = docs.count()
 
     t0 = time.time()
-    stats = duplicate_span_stats(
-        docs, window_tokens=WINDOW_TOKENS, prefilter=prefilter
-    )
+    stats = duplicate_span_stats(docs, window_tokens=WINDOW_TOKENS)
     agg = stats.agg(
         F.count("*").alias("rows"),
         F.sum("tokens_removed").alias("tokens_removed"),
@@ -98,12 +70,7 @@ def run_level(cpus: int, data: str, prefilter: str = "auto",
         "tokens_removed": agg["tokens_removed"],
         "docs_touched": agg["docs_touched"],
         "n_tokens": agg["n_tokens"],
-        "prefilter": prefilter,
     }
-    if measure_shuffle:
-        sh = _shuffle_bytes(spark)
-        if sh:
-            out.update(sh)
     spark.stop()
     return out
 
@@ -117,15 +84,10 @@ def main() -> None:
     ap.add_argument("--attempts", type=int, default=2)
     ap.add_argument("--cpus", type=int)
     ap.add_argument("--data")
-    ap.add_argument("--prefilter", default="auto",
-                    choices=["auto", "bloom", "off"])
-    ap.add_argument("--measure-shuffle", action="store_true")
     args = ap.parse_args()
 
     if not args.all:
-        print(json.dumps(run_level(
-            args.cpus, args.data, args.prefilter, args.measure_shuffle
-        )))
+        print(json.dumps(run_level(args.cpus, args.data)))
         return
 
     data = build_corpus(args.docs)
@@ -145,8 +107,6 @@ def main() -> None:
                         str(cpus),
                         "--data",
                         data,
-                        "--prefilter",
-                        args.prefilter,
                     ]
                 )
                 .decode()
@@ -171,7 +131,6 @@ def main() -> None:
     result = {
         "job": f"duplicate_span_stats(window_tokens={WINDOW_TOKENS})",
         "n_docs": args.docs,
-        "prefilter": args.prefilter,
         "levels": {
             str(c): {
                 "best_wall_s": best[c],
